@@ -1572,14 +1572,6 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return media.filter(F.col("kind") == "image").mapInPandas(run, RESIZED_SCHEMA)
 
 
-def decode_real(payload: bytes):
-    """Real decode entry point: header-simple formats (24-bit BMP, P6 PPM,
-    PCM16 WAV) decode in pure Python via decode_media — no codec library.
-    Compressed codec formats raise NotImplementedError; a deployment with
-    PIL/ffmpeg swaps them in here."""
-    return decode_media(payload)
-
-
 # -- real-decode consumers: per-media stats for corpus filtering -------------
 #
 # The standard multimodal curation filters — resolution gates, brightness

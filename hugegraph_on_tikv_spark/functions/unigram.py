@@ -196,9 +196,12 @@ def unigram_train(docs: DataFrame, n_iters: int = 1, max_piece_len: int = 4,
     `words` (r12, guide §2.4): callers that already hold the corpus'
     (word, freq) table — e.g. one materialized by word_freqs and shared
     with unigram_encode — pass it here so training never re-tokenizes
-    the corpus; it must equal word_freqs(docs, text_col).
+    the corpus; it must equal word_freqs(docs, text_col).  The caller
+    owns a passed table: training neither persists nor unpersists it.
     """
-    words = (word_freqs(docs, text_col) if words is None else words).persist()
+    own_words = words is None
+    if own_words:
+        words = word_freqs(docs, text_col).persist()
     pieces = seed_pieces(words, max_piece_len, n_multi).persist()
     for _ in range(n_iters):
         seg = viterbi_segment(words, piece_scores(pieces), max_piece_len)
@@ -214,11 +217,13 @@ def unigram_train(docs: DataFrame, n_iters: int = 1, max_piece_len: int = 4,
     # cache hygiene (ADVICE r9): vocab is vocab-sized — cut it eagerly
     # to a checkpoint so the iteration caches (words + final pieces) can
     # be released HERE instead of leaking executor cache across repeated
-    # train calls in a long-lived session.  The returned words table is
-    # unpersisted but still valid (it recomputes from docs if used).
+    # train calls in a long-lived session.  A words table built here is
+    # returned unpersisted but still valid (it recomputes from docs if
+    # used).
     vocab = vocab.localCheckpoint(eager=True)
     pieces.unpersist()
-    words.unpersist()
+    if own_words:
+        words.unpersist()
     return vocab, words
 
 

@@ -54,11 +54,6 @@ def out_edges(edges: DataFrame, vertex_ids: Sequence[int], label: str | None = N
     return e.filter(F.col("src").isin(list(vertex_ids)))
 
 
-def in_edges(edges: DataFrame, vertex_ids: Sequence[int], label: str | None = None) -> DataFrame:
-    e = edges.filter(F.col("label") == label) if label else edges
-    return e.filter(F.col("dst").isin(list(vertex_ids)))
-
-
 def neighbors(edges: DataFrame, vertex_ids: Sequence[int], direction: str = OUT,
               label: str | None = None) -> DataFrame:
     """Distinct neighbor ids of a vertex set."""

@@ -189,7 +189,14 @@ class BucketedLayout:
         if delete_keys is not None:
             dk = delete_keys.select(*key_cols)
             gone = dk if gone is None else gone.unionByName(dk)
-        merged = existing.join(gone.distinct(), list(key_cols), "left_anti")
+        # null-safe key match: a key column may be NULL (every edge label
+        # but `contains` has a NULL linenumber), and a plain equi-join
+        # would never match such a row — its delete or replace would
+        # silently do nothing
+        gone = gone.distinct().alias("g")
+        merged = existing.alias("x").join(
+            gone, [F.col(f"x.{c}").eqNullSafe(F.col(f"g.{c}"))
+                   for c in key_cols], "left_anti")
         if upserts is not None:
             merged = merged.unionByName(upserts.select(*schema.fieldNames()))
         # stage the touched buckets through a throwaway bucketed table: the

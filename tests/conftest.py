@@ -25,12 +25,10 @@ _SLOW_TESTS = {
     "test_oracle_diff.py::test_query_matches_oracle[g_pagerank]",
     "test_oracle_diff.py::test_query_matches_oracle[dsl_counts]",
     "test_graph_ops.py::test_louvain_full_contraction_improves_resolution_limit",
-    "test_graph_ops.py::test_louvain_identity_proposal_fastpath_equal",
     "test_property.py::test_lm_two_path_join_property",
     "test_oracle_diff.py::test_query_matches_oracle[dsl_rows]",
     "test_property.py::test_kmv_join_size_exact_when_k_covers_domain",
     "test_graph_ops.py::test_modularity_local_move_improves_and_never_decreases",
-    "test_graph_ops.py::test_louvain_level1_parity_breaks_ring_oscillation",
     "test_oracle_diff.py::test_query_matches_oracle[sim_ivf_topk]",
     "test_graph_ops.py::test_pagerank_warm_start_converges_faster",
     "test_similarity.py::test_ivf_maybe_compact_refits_drifted_index",

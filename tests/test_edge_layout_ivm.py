@@ -87,6 +87,29 @@ def test_upsert_touches_only_mutated_buckets(spark, tmp_path):
         layout.drop()
 
 
+def test_upsert_default_key_matches_null_linenumber(spark, tmp_path):
+    """Every label but `contains` has a NULL linenumber, which is part of
+    the default row key: a default-key delete must remove such an edge
+    and a default-key re-upsert must replace it, not duplicate it."""
+    placed = [(i, 200 + i, "placed", None, float(i)) for i in range(6)]
+    contains = [(200 + i, 300 + i, "contains", i, 1.0) for i in range(6)]
+    layout = DualEdgeLayout.materialize(
+        _edges(spark, placed + contains), "t_ivm_null",
+        str(tmp_path / "dual"), 4)
+    try:
+        dels = _edges(spark, [(1, 201, "placed", None, 0.0)]).select(
+            "src", "dst", "label", "linenumber")
+        ups = _edges(spark, [(2, 202, "placed", None, 99.0)])
+        layout.upsert(upserts=ups, delete_keys=dels)
+        want = sorted([r for r in placed if r[0] not in (1, 2)]
+                      + [(2, 202, "placed", None, 99.0)] + contains,
+                      key=repr)
+        for key in ("src", "dst"):
+            assert sorted(_rows(layout.edges(key)), key=repr) == want
+    finally:
+        layout.drop()
+
+
 def test_upsert_preserves_exchange_free_hop_plans(spark, tmp_path):
     """Plan guard: after an incremental merge the one-file-per-bucket
     contract still holds, so the two-hop SMJ keeps ZERO exchanges and zero

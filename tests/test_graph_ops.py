@@ -1510,9 +1510,10 @@ def test_greedy_coloring_shuffle_fallback_same_colors(spark):
 
 def test_numerator_from_sed_equals_original_graph(spark):
     """VERDICT r9 #4 pin: the contracted-graph numerator guard
-    (_numerator_from_sed) must equal the original-graph numerator
-    (_numerator_from_und) for ANY labeling of the super-vertices —
-    random graphs, random contractions, random super-labelings."""
+    (_numerator_from_sed) must equal the original-graph numerator — the
+    summed contribs of the public `modularity` reference — for ANY
+    labeling of the super-vertices: random graphs, random contractions,
+    random super-labelings."""
     import random
 
     from pyspark.sql import functions as F
@@ -1546,7 +1547,8 @@ def test_numerator_from_sed_equals_original_graph(spark):
             [(v, sl[lvl1[v]]) for v in ids if lvl1[v] in sl],
             "id long, community long")
         got = analytics._numerator_from_sed(sed, m, slab)
-        want = analytics._numerator_from_und(und, m, projected)
+        want = int(analytics.modularity(e, projected)
+                   .agg(F.sum("contrib")).collect()[0][0])
         assert got == want, (trial, got, want)
 
 
@@ -1588,50 +1590,44 @@ def test_louvain_full_three_level_schedule_is_monotone(spark):
 
 
 def test_louvain_identity_proposal_fastpath_equal(spark):
-    """r11: the identity fast path in both proposal functions (taken on
-    rounds where the labeling is provably still the singleton identity)
-    must propose EXACTLY the generic path's labeling — winner, gain gate
-    and parity decisions included — on graphs with hubs, ties and
-    parallel-ish structure, for both parities."""
+    """r11: the identity fast path of the proposal (taken on rounds where
+    the labeling is provably still the singleton identity) must propose
+    EXACTLY the generic path's labeling — winner, gain gate and parity
+    decisions included — for both parities and none, on level 1's
+    unit-weight graph (hubs, ties, parallel-ish structure) and on a
+    contracted-style graph with self-loops."""
     edges = [(i, (i + 1) % 30) for i in range(30)]          # cycle
     edges += [(0, j) for j in range(2, 12)]                  # hub fan
     edges += [(40, 41), (41, 42), (40, 42), (42, 43)]        # triangle+tail
-    e = spark.createDataFrame(edges, "src long, dst long")
-    und = analytics._undirected_simple(e).localCheckpoint(eager=True)
-    m = und.count()
-    ident = (und.select(F.col("u").alias("id"))
-             .unionByName(und.select(F.col("v").alias("id"))).distinct()
-             .select("id", F.col("id").alias("_c")))
-    for par in (0, 1, None):
-        gen = {(r["id"], r["_c"]) for r in analytics._local_move_proposal(
-            und, ident, m, parity=par).collect()}
-        fast = {(r["id"], r["_c"]) for r in analytics._local_move_proposal(
-            und, ident, m, parity=par, identity=True).collect()}
-        assert fast == gen, (par, fast ^ gen)
-    # weighted twin on a contracted-style graph with self-loops
-    sed = spark.createDataFrame(
+    unit, m, _ = analytics._unit_graph(
+        spark.createDataFrame(edges, "src long, dst long"))
+    loops = spark.createDataFrame(
         [(1, 2, 3), (1, 3, 1), (2, 3, 2), (1, 1, 4), (3, 4, 1),
          (4, 5, 2), (5, 5, 1)], "u2 long, v2 long, w long")
-    sm = 14  # total weight = Σ w
-    sident = (sed.select(F.col("u2").alias("sid"))
-              .unionByName(sed.select(F.col("v2").alias("sid"))).distinct()
-              .select("sid", F.col("sid").alias("sc")))
-    for par in (0, 1, None):
-        gen = {(r["sid"], r["sc"]) for r in analytics._weighted_move_proposal(
-            sed, sident, sm, parity=par).collect()}
-        fast = {(r["sid"], r["sc"]) for r in analytics._weighted_move_proposal(
-            sed, sident, sm, parity=par, identity=True).collect()}
-        assert fast == gen, (par, fast ^ gen)
+    for sed, sm in ((unit, m), (loops, 14)):   # 14 = Σ w of `loops`
+        wdeg, adj = analytics._level_invariants(sed, small=False)
+        ident = wdeg.select("sid", F.col("sid").alias("sc"))
+        for par in (0, 1, None):
+            gen = {(r["sid"], r["sc"]) for r in
+                   analytics._weighted_move_proposal(
+                       wdeg, adj, ident, sm, parity=par).collect()}
+            fast = {(r["sid"], r["sc"]) for r in
+                    analytics._weighted_move_proposal(
+                        wdeg, adj, ident, sm, parity=par,
+                        identity=True).collect()}
+            assert fast == gen, (sm, par, fast ^ gen)
+        wdeg.unpersist()
+        adj.unpersist()
 
 
 def test_louvain_proposal_round_exchange_free(spark):
     """r11 plan pin (the greedy_coloring posture brought to Louvain):
-    with the persisted adjacency hash-partitioned on `id`
-    (_louvain_invariants), a broadcast-regime proposal round's two
-    edge-scale aggregations — groupBy(id, cand) and the min_by argmax
-    groupBy(id) — must reuse the cached partitioning: the EXECUTED plan
-    may contain no ENSURE_REQUIREMENTS exchange keyed on the vertex id
-    (the only id-keyed exchange is the one-time REPARTITION_BY_COL
+    with the persisted adjacency hash-partitioned on `sid`
+    (_level_invariants), a broadcast-regime proposal round's two
+    edge-scale aggregations — groupBy(sid, cand) and the min_by argmax
+    groupBy(sid, ...) — must reuse the cached partitioning: the EXECUTED
+    plan may contain no ENSURE_REQUIREMENTS exchange keyed on the vertex
+    id (the only sid-keyed exchange is the one-time REPARTITION_BY_COL
     inside the cached relation).  Community-keyed exchanges (d_c)
     are vertex-scale and allowed."""
     import re
@@ -1639,37 +1635,37 @@ def test_louvain_proposal_round_exchange_free(spark):
     edges = [(i, (i + 1) % 200) for i in range(200)]
     edges += [(i, (i * 7 + 3) % 200) for i in range(0, 200, 3)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    und = analytics._undirected_simple(e).localCheckpoint(eager=True)
-    m = und.count()
-    deg, adj = analytics._louvain_invariants(und)
+    sed, m, small = analytics._unit_graph(e)
+    assert small
+    wdeg, adj = analytics._level_invariants(sed, small)
     try:
         adj.count()   # materialize the cache as round 1's job would
-        lab = deg.select("id", (F.col("id") % 7).alias("_c"))
-        prop = analytics._local_move_proposal(
-            und, lab, m, small=True, deg=deg, adj=adj, parity=0)
+        lab = wdeg.select("sid", (F.col("sid") % 7).alias("sc"))
+        prop = analytics._weighted_move_proposal(
+            wdeg, adj, lab, m, parity=0, small=True)
         prop.write.format("noop").mode("overwrite").save()
         txt = prop._jdf.queryExecution().executedPlan().toString()
-        # every id-keyed hashpartitioning exchange must be either the
-        # cached REPARTITION_BY_COL or deg's one-time cached build (child
-        # = the id-keyed partial_count aggregate, textually repeated per
-        # InMemoryTableScan of deg) — never a per-round insertion: the
-        # removed exchanges were keyed (id, cand) (the nbr aggregation)
-        # and id-with-a-min_by-child (the argmax)
+        # every sid-keyed hashpartitioning exchange must be either the
+        # cached REPARTITION_BY_COL or wdeg's one-time cached build (child
+        # = the sid-keyed partial_sum aggregate, textually repeated per
+        # InMemoryTableScan of wdeg) — never a per-round insertion: the
+        # removed exchanges were keyed (sid, cand) (the nbr aggregation)
+        # and sid-with-a-min_by-child (the argmax)
         lines = txt.splitlines()
         bad = []
         for i, l in enumerate(lines):
-            if not re.search(r"Exchange hashpartitioning\(id#\d+", l):
+            if not re.search(r"Exchange hashpartitioning\(sid#\d+", l):
                 continue
             if "REPARTITION_BY_COL" in l:
                 continue
             nxt = lines[i + 1] if i + 1 < len(lines) else ""
-            is_deg_build = ("partial_count(1)" in nxt
+            is_deg_build = ("partial_sum(w" in nxt
                             and "cand" not in l and "cand" not in nxt)
             if not is_deg_build:
                 bad.append((l.strip()[:110], nxt.strip()[:110]))
         assert not bad, bad
     finally:
-        deg.unpersist()
+        wdeg.unpersist()
         adj.unpersist()
 
 

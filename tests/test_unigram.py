@@ -87,6 +87,24 @@ def test_train_matches_python_reference(spark, toy):
     assert {p: i for p, (_, i) in got.items()} == ref_ids
 
 
+def test_train_keeps_caller_words_cached(spark, toy):
+    """A caller-supplied words table stays the caller's: training must
+    not unpersist it, and the vocab must equal the self-built one."""
+    words = U.word_freqs(toy).persist()
+    try:
+        words.count()
+        vocab, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4,
+                                   n_multi=200, words=words)
+        assert words.is_cached
+        assert words.storageLevel.useMemory
+        got = sorted(tuple(r) for r in vocab.collect())
+        own, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4,
+                                 n_multi=200)
+        assert got == sorted(tuple(r) for r in own.collect())
+    finally:
+        words.unpersist()
+
+
 def test_encode_matches_python_reference(spark, toy):
     vocab, _ = U.unigram_train(toy, n_iters=1, max_piece_len=4, n_multi=200)
     enc = U.unigram_encode(toy, vocab, max_piece_len=4)

@@ -1,7 +1,8 @@
-"""Probe the g_louvain entry's round schedule: accept/reject pattern and
-per-action wall clock (LOUVAIN_TRACE prints from analytics.py).
+"""Probe the g_louvain entry: per-rep wall clock, the Spark jobs each rep
+runs, and the -1/-2 certificate numerators (the full and the
+local-move-only labeling's exact modularity numerators).
 
-Usage: LOUVAIN_TRACE=1 python tools/louvain_probe.py [reps]
+Usage: python tools/louvain_probe.py [reps]
 """
 from __future__ import annotations
 
@@ -24,15 +25,22 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.raw_queries()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     for r in range(reps):
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
+        j0 = dag.nextJobId()
         t0 = time.perf_counter()
         df = qs["g_louvain"](spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
-        jobs = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-        print(f"# g_louvain rep {r}: {time.perf_counter() - t0:.3f}s "
-              f"jobs={jobs}", flush=True)
+        wall = time.perf_counter() - t0
+        jobs = dag.nextJobId() - j0
+        # outside the timed window: the certificate rows only
+        cert = {row["id"]: row["community"]
+                for row in df.filter("id < 0").collect()}
+        print(f"# g_louvain rep {r}: {wall:.3f}s jobs={jobs} "
+              f"num_full={cert.get(-1)} num_local={cert.get(-2)}",
+              flush=True)
 
 
 if __name__ == "__main__":
