@@ -594,6 +594,10 @@ def main() -> None:
         "unit": "sec",
         "queries": isolated,
         "sf": sf_val,
+        # what the run actually ran on (never shed)
+        "master": spark.sparkContext.master,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "sf_dir": SF_DIR,
         "reference_drift": drift_flag,
         "twin_ratios": {p: e.get("ratio_vs_calibration")
                         for p, e in twin_out.items()},
@@ -617,7 +621,8 @@ def main() -> None:
     }
     line = json.dumps(compact, separators=(",", ":"))
     # capture-limit guard: shed detail (kept in BENCH_FULL.json) until the
-    # line fits; queries/value are never shed.
+    # line fits; queries/value and master/defaultParallelism/sf_dir are
+    # never shed.
     for shed in ("extras", "queries_layout_plain", "queries_layout",
                  "steady_state", "amortized", "twin_ratios"):
         if len(line) <= 1800:
